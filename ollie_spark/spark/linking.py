@@ -74,53 +74,73 @@ def entity_mentions(mentions: DataFrame) -> DataFrame:
     return sides[0].unionByName(sides[1]).where(F.col("norm") != "")
 
 
-def minhash_signature(df: DataFrame, col: str = "norm",
-                      num_hashes: int = 16) -> DataFrame:
-    """Add ``sig: array<bigint>`` — MinHash over char 3-gram shingles.
-
-    All map-side: shingling via transform(sequence(...)), each signature
-    slot an array_min over seeded xxhash64.  No explode, no shuffle.
-    """
-    c = F.col(col)
-    shingles = F.when(
+def _char3_grams(name: str):
+    """Distinct char-3-gram array of a string column (the whole string
+    when shorter than one gram) — the ONE gram construction MinHash
+    shingling and Jaccard verification share."""
+    c = F.col(name)
+    return F.array_distinct(F.when(
         F.length(c) < 3, F.array(c)
     ).otherwise(
         F.transform(F.sequence(F.lit(1), F.length(c) - 2),
-                    lambda i: c.substr(i, F.lit(3))))
-    df = df.withColumn("_shingles", F.array_distinct(shingles))
+                    lambda i: c.substr(i, F.lit(3)))))
 
-    # ONE aggregate pass computes all num_hashes signature slots: the
-    # accumulator is the running per-seed minimum array, each element
-    # contributes its num_hashes seeded hashes via zip_with/least.
-    # Identical values to the per-seed array_min(transform(...)) form,
-    # but a single expression tree instead of num_hashes of them —
-    # the per-seed forest cost ~83s of cold Catalyst/codegen work per
-    # session (9.5s warm, data-independent) on the 16-hash default.
-    # NB: lambdas must take exactly the declared parameter count —
-    # pyspark HOFs change semantics with arity (transform passes
-    # (elem, index) to 2-param lambdas), hence no default-arg seeds.
+
+def _gram_jaccard(ga, gb):
+    """Exact Jaccard between two DISTINCT gram arrays — the ONE
+    verification rule every LSH candidate path applies.  |A ∪ B| is
+    |A| + |B| - |A ∩ B|, so one array_intersect serves both terms; it
+    is let-bound through a one-element transform because a filter or
+    join condition gets no subexpression elimination (a bare reuse
+    evaluates the intersection twice).  The double division equals
+    size(∩) / size(∪), so every threshold keeps the same pairs."""
+    return F.element_at(F.transform(
+        F.array(F.size(F.array_intersect(ga, gb))),
+        lambda n: n / (F.size(ga) + F.size(gb) - n)), 1)
+
+
+def _char3_jaccard(a: str, b: str):
+    """:func:`_gram_jaccard` over two string columns' char-3-grams."""
+    return _gram_jaccard(_char3_grams(a), _char3_grams(b))
+
+
+def _minhash_grams(df: DataFrame, col: str, num_hashes: int) -> DataFrame:
+    """``df`` + ``_grams`` (:func:`_char3_grams` of ``col``) + ``sig``.
+
+    ONE aggregate pass computes all num_hashes slots (running per-seed
+    minimum array, zip_with/least per gram): the per-seed
+    array_min(transform(...)) forest cost ~83s of cold Catalyst/codegen
+    work per session (9.5s warm) on the 16-hash default.  NB: lambdas
+    must take exactly the declared parameter count — pyspark HOFs change
+    semantics with arity (transform passes (elem, index) to 2-param
+    lambdas), hence no default-arg seeds."""
     long_max = (1 << 63) - 1
     init = F.array(*[F.lit(long_max).cast("long")
                      for _ in range(num_hashes)])
     sig = F.aggregate(
-        "_shingles", init,
+        "_grams", init,
         lambda acc, x: F.zip_with(
             acc,
             F.array(*[F.xxhash64(x, F.lit(s)) for s in range(num_hashes)]),
             lambda a, h: F.least(a, h)))
-    return df.withColumn("sig", sig).drop("_shingles")
+    return df.withColumn("_grams", _char3_grams(col)).withColumn("sig", sig)
 
 
-def _lsh_banded(entities: DataFrame, num_hashes: int,
-                bands: int) -> DataFrame:
-    """(norm, band_key): minhash signatures banded — the SINGLE band
-    construction the pair generator and the dropped-bucket metric both
-    read (previously duplicated between the two, a hand-mirroring
-    drift hazard)."""
+def minhash_signature(df: DataFrame, col: str = "norm",
+                      num_hashes: int = 16) -> DataFrame:
+    """Add ``sig: array<bigint>`` — MinHash over char 3-gram shingles.
+    All map-side: no explode, no shuffle."""
+    return _minhash_grams(df, col, num_hashes).drop("_grams")
+
+
+def _band(sigs: DataFrame, num_hashes: int, bands: int,
+          *cols: str) -> DataFrame:
+    """(*cols, band_key): one row per band of each signature — the
+    SINGLE band construction the pair generator, the dropped-bucket
+    metric and the incremental path all read."""
     rows = num_hashes // bands
-    sigs = minhash_signature(entities.select("norm"), num_hashes=num_hashes)
     return sigs.select(
-        "norm",
+        *cols,
         F.explode(F.array(*[
             F.xxhash64(F.concat_ws(
                 ",", *[F.element_at("sig", b * rows + r + 1).cast("string")
@@ -128,79 +148,60 @@ def _lsh_banded(entities: DataFrame, num_hashes: int,
             for b in range(bands)])).alias("band_key"))
 
 
+def _lsh_banded(entities: DataFrame, num_hashes: int,
+                bands: int) -> DataFrame:
+    """(norm, band_key): minhash signatures banded."""
+    sigs = minhash_signature(entities.select("norm"), num_hashes=num_hashes)
+    return _band(sigs, num_hashes, bands, "norm")
+
+
 def lsh_candidate_pairs(entities: DataFrame, num_hashes: int = 16,
                         bands: int = 8, jaccard_threshold: float = 0.5,
                         max_bucket: int = 64,
                         metrics_out: dict | None = None) -> DataFrame:
-    """(norm_a, norm_b) near-duplicate candidates, verified by token
-    Jaccard.  ``entities`` must have distinct ``norm``.
+    """(norm_a, norm_b) near-duplicate candidates, verified by exact
+    char-3-gram Jaccard inside the band self-join, on the gram arrays
+    the MinHash pass built and stored (no gram array is rebuilt per
+    join row).  ``entities`` must have distinct ``norm``.
 
     Pass ``metrics_out`` (a dict) to receive ``dropped_buckets`` —
-    counted off the same materialized sized frame the self-join reads,
+    counted off the same materialized sizes frame the self-join reads,
     so pairs + metric cost one signature computation."""
-    # materialize the banded frame ONCE: aliasing the lazy plan as
-    # both self-join sides re-runs the whole minhash signature
-    # pipeline per side (the dominant cost of canonicalize's blocking
-    # stage).  Bucket sizes come from a map-side-combining
-    # groupBy(band_key) over the materialized frame + an equi-join
-    # back (r6): the former window count colocated every row of a
-    # band on ONE task — the most degenerate bucket (the exact case
-    # the cap catches) funneled through a single task before the cap
-    # could drop it; the groupBy shuffles only (band_key,
-    # partial-count) rows and AQE can skew-split the join, which a
-    # window cannot.  The dropped metric is one count over the sizes
-    # frame — still no second signature computation.
-    banded = materialize_once(_lsh_banded(entities, num_hashes, bands))
-    sizes = banded.groupBy("band_key").agg(
-        F.count("*").alias("bucket_n"))
-    # r7: the sizing agg runs eagerly ONCE (materialized) and its
-    # dropped count decides the join — when NO bucket exceeds the cap
-    # the filter join is an identity, so skip it and its second
-    # full-frame materialization barrier outright (the common case);
-    # the capped path reads the STORED sizes, never re-running the agg.
-    sizes = materialize_once(sizes)
+    # materialize the per-norm (norm, _grams, sig) frame ONCE: aliasing
+    # the lazy plan as both self-join sides re-runs the whole minhash
+    # pipeline per side.  Banding stays lazy over it (a cheap explode
+    # per reader), so the store holds one gram array per norm, not one
+    # per band.  Bucket sizes: a map-side-combining groupBy(band_key)
+    # + an equi-join back (r6) — a window count would funnel the most
+    # degenerate bucket through ONE task before the cap could drop it.
+    # The sizing agg runs eagerly once and its dropped count decides
+    # the join (r7): with no bucket over the cap the filter join is an
+    # identity and is skipped.
+    sigs = materialize_once(
+        _minhash_grams(entities.select("norm"), "norm", num_hashes))
+    banded = _band(sigs, num_hashes, bands, "norm", "_grams")
+    sizes = materialize_once(banded.groupBy("band_key").agg(
+        F.count("*").alias("bucket_n")))
     dropped = sizes.where(F.col("bucket_n") > max_bucket).count()
     if metrics_out is not None:
         metrics_out["dropped_buckets"] = dropped
-    if dropped == 0:
-        kept = banded
-    else:
-        kept = materialize_once(
-            banded.join(sizes.where(F.col("bucket_n") <= max_bucket),
-                        "band_key")
-            .drop("bucket_n"))
+    kept = banded if dropped == 0 else (
+        banded.join(sizes.where(F.col("bucket_n") <= max_bucket),
+                    "band_key").drop("bucket_n"))
     a = kept.alias("a")
     b = kept.alias("b")
-    pairs = (a.join(b, "band_key")
-             .where(F.col("a.norm") < F.col("b.norm"))
-             .select(F.col("a.norm").alias("norm_a"),
-                     F.col("b.norm").alias("norm_b"))
-             .distinct())
-
-    # verify candidates with exact char-3-gram Jaccard — the same
-    # feature space the MinHash blocking approximates, so abbreviation
-    # variants ("acme corp" / "acme corporation") survive where
-    # token-level Jaccard would reject them
-    return pairs.where(_char3_jaccard("norm_a", "norm_b")
-                       >= F.lit(jaccard_threshold))
-
-
-def _char3_grams(c: str):
-    col = F.col(c)
-    return F.array_distinct(F.when(
-        F.length(col) < 3, F.array(col)
-    ).otherwise(
-        F.transform(F.sequence(F.lit(1), F.length(col) - 2),
-                    lambda i: col.substr(i, F.lit(3)))))
-
-
-def _char3_jaccard(a: str, b: str):
-    """Exact char-3-gram Jaccard between two string columns — the ONE
-    verification rule every LSH candidate path applies (batch pair
-    generation and incremental attach share it, no mirrored copy)."""
-    ga, gb = _char3_grams(a), _char3_grams(b)
-    return (F.size(F.array_intersect(ga, gb))
-            / F.size(F.array_union(ga, gb)))
+    # verify in the join condition, so only verified pairs reach the
+    # distinct's shuffle.  Char-3-grams are the feature space the
+    # MinHash blocking approximates, so abbreviation variants ("acme
+    # corp" / "acme corporation") survive where token-level Jaccard
+    # would reject them.
+    return (a.join(b, (F.col("a.band_key") == F.col("b.band_key"))
+                   & (F.col("a.norm") < F.col("b.norm"))
+                   & (_gram_jaccard(F.col("a._grams"), F.col("b._grams"))
+                      >= F.lit(jaccard_threshold)))
+            .select(F.col("a.norm").alias("norm_a"),
+                    F.col("b.norm").alias("norm_b"))
+            .distinct())
 
 
 def band_entities(entities: DataFrame, num_hashes: int = 16,
@@ -342,18 +343,8 @@ def connected_components(pairs: DataFrame, vertices: DataFrame,
             if ra != rb:
                 parent[max(ra, rb)] = min(ra, rb)
         rows = [(v, find(v)) for v in parent]
-        spark = pairs.sparkSession
-        # ship the resolved components back as a pandas frame: with
-        # Arrow enabled this lands as a JVM LocalRelation, so every
-        # downstream evaluation is JVM-only — the plain-list form
-        # becomes a pickled python RDD that spins python workers on
-        # EACH evaluation of the plan (measured 3.6s cold / 0.5s warm
-        # per count at 32 cores vs 0.25s for the Arrow path)
-        import pandas as pd
-
-        local = spark.createDataFrame(
-            pd.DataFrame(rows, columns=["norm", "component"]))
-        return local.unionByName(isolated)
+        return (_driver_components(pairs.sparkSession, rows)
+                .unionByName(isolated))
 
     if algorithm == "star":
         return _star_components(sym, max_iter).unionByName(isolated)
@@ -390,6 +381,22 @@ def connected_components(pairs: DataFrame, vertices: DataFrame,
             f"raise max_iter or use algorithm='star'",
             RuntimeWarning, stacklevel=2)
     return labels.unionByName(isolated)
+
+
+def _driver_components(spark, rows) -> DataFrame:
+    """(norm, component) rows resolved on the driver -> DataFrame.
+
+    Shipped as a pandas frame: with Arrow enabled this lands as a JVM
+    LocalRelation, so every downstream evaluation is JVM-only — the
+    plain-list form becomes a pickled python RDD that spins python
+    workers on EACH evaluation of the plan (measured 3.6s cold / 0.5s
+    warm per count at 32 cores vs 0.25s for the Arrow path).  The
+    explicit schema keeps an empty row list valid."""
+    import pandas as pd
+
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=["norm", "component"]),
+        "norm string, component string")
 
 
 def _star_components(sym: DataFrame, max_iter: int = 50) -> DataFrame:
@@ -696,14 +703,7 @@ def canonicalize(mentions: DataFrame, num_hashes: int = 16,
             norms, num_hashes=num_hashes, bands=bands)
         if metrics_out is not None:
             metrics_out["dropped_buckets"] = dropped
-        import pandas as pd
-
-        spark = mentions.sparkSession
-        # pandas/Arrow -> JVM LocalRelation (the union-find hatch's
-        # ship-back discipline: a plain-list createDataFrame would spin
-        # python workers per downstream evaluation)
-        comp = spark.createDataFrame(
-            pd.DataFrame(comp_rows, columns=["norm", "component"]))
+        comp = _driver_components(mentions.sparkSession, comp_rows)
     else:
         pairs = lsh_candidate_pairs(entities, num_hashes=num_hashes,
                                     bands=bands, metrics_out=metrics_out)

@@ -2,6 +2,8 @@
 checkpoint/resume materialization tests."""
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from ollie_spark.spark.corpus import corpus
@@ -690,3 +692,78 @@ def test_local_blocking_short_and_colliding_norms(spark):
                  for r in edges.collect()})
 
     assert run(10_000) == run(0)
+
+
+# ------------------------- stored-gram verification + empty inputs
+
+# a small alphabet makes band collisions (so candidate pairs) common;
+# the fixed norms always present cover norms shorter than one gram,
+# exactly one gram, repeated grams, digits, non-ASCII and CJK
+_GRAM_ALPHABET = "ab1 é中文"
+_FIXED_NORMS = {"a", "ab", "abc", "aaaaaa", "aaaa", "123", "1234",
+                "café", "cafe", "中文字", "中文字符", "ab1中"}
+
+
+def _py_grams(s):
+    return {s} if len(s) < 3 else {s[i:i + 3] for i in range(len(s) - 2)}
+
+
+@settings(max_examples=6, deadline=None)
+@given(norms=st.lists(st.text(alphabet=_GRAM_ALPHABET, min_size=1,
+                              max_size=9), max_size=30))
+def test_stored_gram_verification_matches_string_rule(spark, norms):
+    """lsh_candidate_pairs verifies Jaccard inside the band join on the
+    gram arrays its MinHash pass stored; at every threshold its pair
+    set must equal the unverified band pairs filtered by the
+    string-spelled _char3_jaccard, and by python set Jaccard."""
+    from ollie_spark.spark.linking import _char3_jaccard
+
+    ents = spark.createDataFrame(
+        [(n,) for n in sorted(set(norms) | _FIXED_NORMS)], "norm string")
+    # Jaccard >= 0 always holds: threshold 0 keeps every band pair
+    cands = lsh_candidate_pairs(ents, jaccard_threshold=0.0) \
+        .localCheckpoint()
+    cand_rows = [(r.norm_a, r.norm_b) for r in cands.collect()]
+    for t in (0.3, 0.5, 0.8):
+        got = {(r.norm_a, r.norm_b) for r in
+               lsh_candidate_pairs(ents, jaccard_threshold=t).collect()}
+        spelled = {(r.norm_a, r.norm_b) for r in
+                   cands.where(_char3_jaccard("norm_a", "norm_b")
+                               >= F.lit(t)).collect()}
+        py = {(a, b) for a, b in cand_rows
+              if len(_py_grams(a) & _py_grams(b))
+              / len(_py_grams(a) | _py_grams(b)) >= t}
+        assert got == spelled == py, t
+
+
+_MENTION_SCHEMA = ("doc_id string, span_idx int, arg1_text string, "
+                   "rel_text string, arg2_text string, openparse_conf "
+                   "double, conf double, pattern string")
+
+
+@pytest.mark.parametrize("threshold", [2_000, -1])
+def test_canonicalize_empty_mentions(spark, threshold):
+    """No mentions -> three empty frames, on the driver hatch (which
+    once built its component frame without a schema and raised) and
+    on the forced distributed path alike."""
+    m = spark.createDataFrame([], _MENTION_SCHEMA)
+    mo = {}
+    linked, nodes, edges = canonicalize(
+        m, metrics_out=mo, local_blocking_threshold=threshold)
+    assert (linked.count(), nodes.count(), edges.count()) == (0, 0, 0)
+    assert mo["dropped_buckets"] == 0
+    assert {"arg1_node", "arg2_node"} <= set(linked.columns)
+
+
+def test_incremental_link_empty_batch(spark):
+    """An empty batch against a non-empty map links nothing and adds
+    no map rows."""
+    from ollie_spark.spark.linking import incremental_link
+
+    existing = spark.createDataFrame([("barack obama", "barack obama")],
+                                     "norm string, node_id string")
+    mo = {}
+    linked, delta = incremental_link(_mention_frame(spark, []), existing,
+                                     metrics_out=mo)
+    assert (linked.count(), delta.count()) == (0, 0)
+    assert (mo["n_exact"], mo["n_attached"], mo["n_novel"]) == (0, 0, 0)

@@ -76,6 +76,24 @@ def test_q14_jaccard_join_reads_one_checkpointed_frame(spark):
     assert "split(text" not in plan, "tokenization leaked into join plan"
 
 
+def test_lsh_pair_join_reads_stored_grams(spark):
+    """The band self-join of lsh_candidate_pairs verifies Jaccard on
+    the gram arrays its MinHash pass stored: no gram construction
+    (sequence / substring) may appear in its plan, on the uncapped or
+    the capped path — rebuilding the arrays per raw join row cost half
+    of a canonicalize call at 11k norms."""
+    from ollie_spark.spark.linking import lsh_candidate_pairs
+
+    ents = spark.createDataFrame(
+        [("acme corp",), ("acme corporation",), ("ab",)], "norm string")
+    for cap in (64, 1):
+        plan = (lsh_candidate_pairs(ents, max_bucket=cap)
+                ._jdf.queryExecution().executedPlan().toString())
+        assert "sequence(" not in plan and "substring(" not in plan, \
+            f"gram construction leaked into the pair join:\n{plan}"
+        assert "array_intersect(_grams" in plan
+
+
 def test_linked_and_edges_plans_carry_no_normalization(spark):
     """r5 normalize-materialization contract: canonicalize's returned
     linked/edges frames must read the materialized _a1/_a2 columns —

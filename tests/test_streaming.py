@@ -426,3 +426,35 @@ def test_link_mention_batch_actually_uses_banded_state(spark, tmp_path):
     with _pytest.raises(ValueError, match="existing_banded"):
         link_mention_batch(b1, 1, map_dir, linked_dir,
                            banded_state=decoy)
+
+
+def test_link_mention_batch_empty_batch(spark, tmp_path):
+    """An empty micro-batch between two real ones: it must not raise,
+    must add no map rows, and the across-batch band state must still
+    attach the next batch's near-dup to the first batch's node."""
+    from ollie_spark.spark.streaming import link_mention_batch
+
+    schema = ("arg1_text string, rel_text string, arg2_text string, "
+              "conf double")
+    map_dir, linked_dir = str(tmp_path / "map"), str(tmp_path / "lk")
+    state = {}
+    link_mention_batch(
+        spark.createDataFrame([("Barack Obama", "visited", "Chicago",
+                                0.9)], schema),
+        0, map_dir, linked_dir, banded_state=state)
+    m0 = {r.norm: r.node_id
+          for r in spark.read.parquet(map_dir).collect()}
+    link_mention_batch(spark.createDataFrame([], schema), 1, map_dir,
+                       linked_dir, banded_state=state)
+    mp = spark.read.parquet(map_dir)
+    assert {r.norm: r.node_id for r in mp.collect()} == m0
+    assert mp.where(F.col("batch_id") == 1).count() == 0
+    assert spark.read.parquet(linked_dir) \
+        .where(F.col("batch_id") == 1).count() == 0
+    link_mention_batch(
+        spark.createDataFrame([("Barack H Obama", "met", "Someone", 0.9)],
+                              schema),
+        2, map_dir, linked_dir, banded_state=state)
+    m2 = {r.norm: r.node_id
+          for r in spark.read.parquet(map_dir).collect()}
+    assert m2["barack h obama"] == m0["barack obama"]
