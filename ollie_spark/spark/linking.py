@@ -11,14 +11,14 @@ Scale notes (100 TB / 10^12 docs):
   one `transform`/`array_min` expression per hash seed over the char
   3-gram array — pure whole-stage-codegen map work over the *distinct*
   entity strings (cardinality « mention count).
-- LSH banding self-joins on the band key only; hot buckets are capped
-  (and counted via `dropped_buckets`) so one degenerate band cannot
-  produce O(n^2) pairs.
-- Connected components defaults to min-label propagation — O(graph
-  diameter) join+agg rounds, tiny for shallow star-like near-dup
-  blocks, with a loud warning if max_iter exhausts — and offers the
-  large-star/small-star algorithm (O(log n) rounds independent of
-  diameter) for adversarially chain-shaped graphs.
+- LSH banding self-joins on the band key only (blocking.
+  bucket_self_join); hot buckets are capped (and counted via
+  `dropped_buckets`) so one degenerate band cannot produce O(n^2)
+  pairs.
+- Connected components is min-label propagation — O(graph diameter)
+  join+agg rounds, tiny for shallow star-like near-dup blocks, with a
+  loud warning if max_iter exhausts — or, for small pair sets, a
+  driver-side union-find that converges to the same labels.
 - The final mentions->canonical join salts the canonical map S ways and
   hashes mentions into the same salt space: mention skew spreads over S
   reducers while the map side only replicates S×.  AQE skew-join stays
@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ollie_spark.spark.blocking import bucket_self_join, cap_buckets
 from ollie_spark.spark.materialize import materialize_once
 
 DETERMINERS = ("the", "a", "an", "this", "that", "these", "those", "some",
@@ -165,40 +166,26 @@ def lsh_candidate_pairs(entities: DataFrame, num_hashes: int = 16,
     join row).  ``entities`` must have distinct ``norm``.
 
     Pass ``metrics_out`` (a dict) to receive ``dropped_buckets`` —
-    counted off the same materialized sizes frame the self-join reads,
+    counted off the same stored signature frame the self-join reads,
     so pairs + metric cost one signature computation."""
-    # materialize the per-norm (norm, _grams, sig) frame ONCE: aliasing
-    # the lazy plan as both self-join sides re-runs the whole minhash
-    # pipeline per side.  Banding stays lazy over it (a cheap explode
-    # per reader), so the store holds one gram array per norm, not one
-    # per band.  Bucket sizes: a map-side-combining groupBy(band_key)
-    # + an equi-join back (r6) — a window count would funnel the most
-    # degenerate bucket through ONE task before the cap could drop it.
-    # The sizing agg runs eagerly once and its dropped count decides
-    # the join (r7): with no bucket over the cap the filter join is an
-    # identity and is skipped.
-    sigs = materialize_once(
-        _minhash_grams(entities.select("norm"), "norm", num_hashes))
-    banded = _band(sigs, num_hashes, bands, "norm", "_grams")
-    sizes = materialize_once(banded.groupBy("band_key").agg(
-        F.count("*").alias("bucket_n")))
-    dropped = sizes.where(F.col("bucket_n") > max_bucket).count()
+    # the per-norm (norm, _grams, sig) frame is what gets stored;
+    # banding stays lazy over it (a cheap explode per reader), so the
+    # store holds one gram array per norm, not one per band.  Verify in
+    # the join condition, so only verified pairs reach the distinct's
+    # shuffle.  Char-3-grams are the feature space the MinHash blocking
+    # approximates, so abbreviation variants ("acme corp" / "acme
+    # corporation") survive where token-level Jaccard would reject them.
+    joined, dropped = bucket_self_join(
+        _minhash_grams(entities.select("norm"), "norm", num_hashes),
+        "band_key", max_bucket,
+        on=(F.col("a.norm") < F.col("b.norm"))
+        & (_gram_jaccard(F.col("a._grams"), F.col("b._grams"))
+           >= F.lit(jaccard_threshold)),
+        keyed=lambda sigs: _band(sigs, num_hashes, bands,
+                                 "norm", "_grams"))
     if metrics_out is not None:
         metrics_out["dropped_buckets"] = dropped
-    kept = banded if dropped == 0 else (
-        banded.join(sizes.where(F.col("bucket_n") <= max_bucket),
-                    "band_key").drop("bucket_n"))
-    a = kept.alias("a")
-    b = kept.alias("b")
-    # verify in the join condition, so only verified pairs reach the
-    # distinct's shuffle.  Char-3-grams are the feature space the
-    # MinHash blocking approximates, so abbreviation variants ("acme
-    # corp" / "acme corporation") survive where token-level Jaccard
-    # would reject them.
-    return (a.join(b, (F.col("a.band_key") == F.col("b.band_key"))
-                   & (F.col("a.norm") < F.col("b.norm"))
-                   & (_gram_jaccard(F.col("a._grams"), F.col("b._grams"))
-                      >= F.lit(jaccard_threshold)))
+    return (joined
             .select(F.col("a.norm").alias("norm_a"),
                     F.col("b.norm").alias("norm_b"))
             .distinct())
@@ -219,15 +206,13 @@ def dropped_buckets(entities: DataFrame, num_hashes: int = 16,
                     bands: int = 8, max_bucket: int = 64) -> int:
     """How many LSH buckets the cap skipped (metrics, not silent).
 
-    Metric-only path over the generator's own band construction
-    (``_lsh_banded`` — no duplicated banding to hand-mirror),
-    aggregated with a map-side-combining groupBy — the same sizing
-    shape the generator itself uses since r6 (no window funnel on
-    either path).  When you also need the pairs, pass ``metrics_out``
-    to :func:`lsh_candidate_pairs` / :func:`canonicalize` instead."""
-    banded = _lsh_banded(entities, num_hashes, bands)
-    return (banded.groupBy("band_key").count()
-            .where(F.col("count") > max_bucket).count())
+    Metric-only path: the generator's own sizing step
+    (blocking.cap_buckets) over its own band construction
+    (``_lsh_banded``).  When you also need the pairs, pass
+    ``metrics_out`` to :func:`lsh_candidate_pairs` /
+    :func:`canonicalize` instead."""
+    return cap_buckets(_lsh_banded(entities, num_hashes, bands),
+                       "band_key", max_bucket)[1]
 
 
 def _frame_sig(df: DataFrame, cols) -> tuple:
@@ -254,8 +239,7 @@ def _frame_sig(df: DataFrame, cols) -> tuple:
 
 def connected_components(pairs: DataFrame, vertices: DataFrame,
                          max_iter: int = 15,
-                         local_threshold: int = 1_000_000,
-                         algorithm: str = "min_label") -> DataFrame:
+                         local_threshold: int = 1_000_000) -> DataFrame:
     """Distributed connected components: (norm, component) per vertex.
 
     Only vertices that occur in ``pairs`` enter the iteration — at web
@@ -277,18 +261,11 @@ def connected_components(pairs: DataFrame, vertices: DataFrame,
     correctness is unaffected either way (the distributed loop computes
     the same components, property-tested below).
 
-    ``algorithm``:
-    - ``min_label`` (default): label propagation — O(graph diameter)
-      rounds.  Near-dup blocks are shallow star-like clusters, so the
-      diameter is tiny in practice; if the loop exhausts ``max_iter``
-      while labels are still changing it emits a warning (components
-      may be split) rather than failing silently.
-    - ``star``: alternating large-star/small-star (Kiveris et al.,
-      "Connected Components in MapReduce and Beyond") — O(log n) rounds
-      regardless of diameter, for adversarially chain-shaped graphs."""
-    if algorithm not in ("min_label", "star"):
-        raise ValueError(f"unknown algorithm {algorithm!r}; "
-                         f"expected 'min_label' or 'star'")
+    The distributed path is min-label propagation — O(graph diameter)
+    rounds.  Near-dup blocks are shallow star-like clusters, so the
+    diameter is tiny in practice; if the loop exhausts ``max_iter``
+    while labels are still changing it emits a warning (components may
+    be split) rather than failing silently."""
     sym = (pairs.select(F.col("norm_a").alias("src"),
                         F.col("norm_b").alias("dst"))
            .unionByName(pairs.select(F.col("norm_b").alias("src"),
@@ -315,9 +292,9 @@ def connected_components(pairs: DataFrame, vertices: DataFrame,
         # whole extra job + distinct shuffle per canonicalize call):
         # src <= dst keeps each undirected edge once AND keeps
         # self-pairs, whose endpoints are exactly the vertices that
-        # appear in `sym` with no src < dst edge — so seeding parent
-        # from the collected endpoints covers every connected vertex,
-        # the same set connected_verts holds.
+        # appear in `sym` with no src < dst edge — so union-find over
+        # the collected edges covers every connected vertex, the same
+        # set connected_verts holds.
         #
         # collect off the CHECKPOINTED symmetric set, not the lazy
         # `pairs` plan — collecting `pairs` would re-run the whole
@@ -325,37 +302,17 @@ def connected_components(pairs: DataFrame, vertices: DataFrame,
         # the most expensive stage of every canonicalize() call.
         # Union-find is direction/order-insensitive, so either edge
         # orientation works.
-        edges_local = (sym.where(F.col("src") <= F.col("dst"))
-                       .select("src", "dst").collect())
-        parent = {}
-        for r in edges_local:
-            parent.setdefault(r.src, r.src)
-            parent.setdefault(r.dst, r.dst)
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for r in edges_local:
-            ra, rb = find(r.src), find(r.dst)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        rows = [(v, find(v)) for v in parent]
-        return (_driver_components(pairs.sparkSession, rows)
+        roots = _union_find(sym.where(F.col("src") <= F.col("dst"))
+                            .select("src", "dst").collect())
+        return (_driver_components(pairs.sparkSession, list(roots.items()))
                 .unionByName(isolated))
-
-    if algorithm == "star":
-        return _star_components(sym, max_iter).unionByName(isolated)
 
     labels = connected_verts.select(
         "norm", F.col("norm").alias("component"))
     # convergence probe: the vertex set is fixed, so the label frame
     # changed iff its (count, hash-sum, hash-sum') signature moved —
-    # ONE agg job per round instead of a join + count (the same
-    # probabilistic probe _star_components uses; see _frame_sig for
-    # the collision argument).
+    # ONE agg job per round instead of a join + count (see _frame_sig
+    # for the collision argument).
     sig = _frame_sig(labels, ("norm", "component"))
     changed = True
     for _ in range(max_iter):
@@ -378,7 +335,7 @@ def connected_components(pairs: DataFrame, vertices: DataFrame,
             f"connected_components: min-label loop exhausted "
             f"max_iter={max_iter} with labels still changing — "
             f"components may be split (graph diameter > max_iter); "
-            f"raise max_iter or use algorithm='star'",
+            f"raise max_iter",
             RuntimeWarning, stacklevel=2)
     return labels.unionByName(isolated)
 
@@ -399,83 +356,27 @@ def _driver_components(spark, rows) -> DataFrame:
         "norm string, component string")
 
 
-def _star_components(sym: DataFrame, max_iter: int = 50) -> DataFrame:
-    """Alternating large-star / small-star rounds over a *symmetric*
-    edge set -> (norm, component) for every vertex in it.
+def _union_find(edges) -> dict:
+    """Driver-side union-find over (u, v) edges -> {vertex: component}
+    for every vertex an edge touches.  Each root is its set's minimum
+    vertex, so the labels equal those min-label propagation converges
+    to; the one driver-side CC both escape hatches (connected_components'
+    small-graph path and _local_blocking_components) run."""
+    parent = {}
 
-    Per round (Kiveris et al. 2014): large-star hangs every neighbor
-    v > u under min(N(u) ∪ {u}); small-star rewires the v <= u
-    neighborhood the same way.  Converges in O(log n) rounds to a
-    forest of depth-1 stars rooted at each component's minimum label,
-    independent of graph diameter."""
-    verts = materialize_once(
-        sym.select(F.col("src").alias("norm")).distinct())
-    # work on undirected unique edges (u > v canonical direction);
-    # per-round frames below keep localCheckpoint for iterative
-    # lineage truncation (see connected_components)
-    edges = materialize_once(
-        sym.where(F.col("src") > F.col("dst"))
-        .select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .distinct())
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
 
-    def _sym(e):
-        return e.unionByName(e.select(F.col("v").alias("u"),
-                                      F.col("u").alias("v")))
-
-    def _edge_sig(e):
-        # probabilistic convergence probe (see _frame_sig): distinct
-        # edge sets are treated equal iff count AND two independently
-        # seeded hash sums agree — one agg job instead of two exceptAll
-        # probes per round.
-        return _frame_sig(e, ("u", "v"))
-
-    sig = _edge_sig(edges)
-    converged = False
-    for _ in range(max_iter):
-        # large-star: m = min over N(u) ∪ {u}; attach v > u to m
-        s = _sym(edges)
-        m = s.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m"))
-        big = (s.join(m, "u")
-               .where(F.col("v") > F.col("u"))
-               .select(F.col("v").alias("u"), F.col("m").alias("v"))
-               .where(F.col("u") != F.col("v"))
-               .distinct())
-        # small-star over the attach edges: m = min over {u} ∪ {v<=u}.
-        # big is ALREADY canonical u > v (large-star attaches each old
-        # v to m <= old u < old v), so the whole set is the v<=u
-        # neighborhood — no filter needed.
-        m2 = big.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m"))
-        small = (big.join(m2, "u")
-                 .select(F.col("v").alias("a"), F.col("m").alias("b"))
-                 .unionByName(m2.select(F.col("u").alias("a"),
-                                        F.col("m").alias("b")))
-                 .where(F.col("a") != F.col("b"))
-                 .select(F.greatest("a", "b").alias("u"),
-                         F.least("a", "b").alias("v"))
-                 .distinct()
-                 .localCheckpoint(eager=True))
-        new_sig = _edge_sig(small)
-        stable = new_sig == sig
-        edges, sig = small, new_sig
-        if stable:
-            converged = True
-            break
-    if not converged:
-        import warnings
-        warnings.warn(
-            f"_star_components: loop exhausted max_iter={max_iter} "
-            f"before the edge set stabilized (probabilistic "
-            f"hash-signature stability probe) — components may be "
-            f"split; raise max_iter", RuntimeWarning, stacklevel=2)
-    # at convergence every non-root hangs directly off its component
-    # min; roots are vertices that never appear as a 'u'
-    labels = edges.select(F.col("u").alias("norm"),
-                          F.col("v").alias("component"))
-    roots = verts.join(labels.select("norm"), "norm", "left_anti") \
-        .select("norm", F.col("norm").alias("component"))
-    return labels.unionByName(roots)
+    for a, b in edges:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in parent}
 
 
 def _local_blocking_components(norms, num_hashes: int = 16,
@@ -491,8 +392,8 @@ def _local_blocking_components(norms, num_hashes: int = 16,
     comma-joined signature-slot strings (Long.toString == str(int) for
     every long), buckets over max_bucket are dropped and counted the
     same way, candidate pairs are verified with the same exact
-    char-3-gram Jaccard, and components are min-root union-find — the
-    same rule every distributed CC algorithm here converges to.
+    char-3-gram Jaccard, and components are :func:`_union_find` — the
+    same labels the distributed min-label loop converges to.
     Equivalence on real corpus norms is pinned by
     test_linking.test_local_blocking_matches_distributed.
 
@@ -546,26 +447,11 @@ def _local_blocking_components(norms, num_hashes: int = 16,
             for b in uniq[i + 1:]:
                 cand.add((a, b))
 
-    parent = {}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in cand:
-        ga, gb = gram_cache[a], gram_cache[b]
-        if len(ga & gb) / len(ga | gb) < jaccard_threshold:
-            continue
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-
-    rows = [(n, find(n) if n in parent else n) for n in norms]
-    return rows, dropped
+    roots = _union_find(
+        (a, b) for a, b in cand
+        if len(gram_cache[a] & gram_cache[b])
+        / len(gram_cache[a] | gram_cache[b]) >= jaccard_threshold)
+    return [(n, roots.get(n, n)) for n in norms], dropped
 
 
 def salted_join(big: DataFrame, small: DataFrame, key: str,
@@ -897,18 +783,14 @@ def incremental_link(new_mentions: DataFrame, existing_map: DataFrame,
     else:
         b_old = _mat(_lsh_banded(existing_map.select("norm").distinct(),
                                  num_hashes, bands))
-    old_sizes = b_old.groupBy("band_key").agg(
-        F.count("*").alias("_bn"))
+    kept, dropped = cap_buckets(b_old, "band_key", max_bucket)
     if metrics_out is not None:
         # attach-tier drops are NOT silent: a hot existing band that
         # exceeds the cap means new near-dup spellings of its entities
         # mint fresh ids instead of attaching (permanent drift until
         # the next full canonicalize) — surface it per increment
-        metrics_out["dropped_bands_attach"] = (
-            old_sizes.where(F.col("_bn") > max_bucket).count())
-    b_old_kept = (b_old.join(old_sizes, "band_key")
-                  .where(F.col("_bn") <= max_bucket)
-                  .select("band_key", F.col("norm").alias("_old")))
+        metrics_out["dropped_bands_attach"] = dropped
+    b_old_kept = kept.select("band_key", F.col("norm").alias("_old"))
     attached = _mat(
         b_new.join(b_old_kept, "band_key")
         .select("norm", "_old").distinct()

@@ -83,9 +83,12 @@ def test_normalize_fused_regex_matches_legacy_chain(spark):
 def test_lsh_fused_metric_agrees_with_standalone(spark):
     """r5 judge item 1: lsh_candidate_pairs' metrics_out dropped-bucket
     count reads the generator's own materialized band frame and must
-    agree with the standalone dropped_buckets (which delegates to the
-    same _lsh_banded construction)."""
-    from ollie_spark.spark.linking import dropped_buckets
+    agree with the standalone dropped_buckets (the same sizing step
+    over the same _lsh_banded construction) and with a plain-Python
+    count of oversize buckets over the collected band keys."""
+    from collections import Counter
+
+    from ollie_spark.spark.linking import _lsh_banded, dropped_buckets
     # 70 identical norms share every band bucket -> any cap < 70 drops
     # all 8 bands' buckets; distinct entities keep theirs
     ents = spark.createDataFrame(
@@ -94,7 +97,9 @@ def test_lsh_fused_metric_agrees_with_standalone(spark):
     mo = {}
     pairs = lsh_candidate_pairs(ents, max_bucket=8, metrics_out=mo)
     pairs.count()
-    assert mo["dropped_buckets"] == dropped_buckets(ents, max_bucket=8) > 0
+    sizes = Counter(r.band_key for r in _lsh_banded(ents, 16, 8).collect())
+    assert (mo["dropped_buckets"] == dropped_buckets(ents, max_bucket=8)
+            == sum(n > 8 for n in sizes.values()) == 8)
     mo2 = {}
     lsh_candidate_pairs(ents, max_bucket=1000, metrics_out=mo2).count()
     assert mo2["dropped_buckets"] == 0
@@ -175,40 +180,12 @@ def test_frame_sig_probe_detects_label_change(spark):
                       ("norm", "component")) != sig
 
 
-def test_star_components_agree_with_min_label(spark):
-    """Property: large-star/small-star and min-label produce the same
-    partition into components on random graphs (including a long chain,
-    where min-label needs O(diameter) rounds and star O(log n))."""
-    import random
-    rng = random.Random(1234)
-    for trial in range(4):
-        n = 30
-        names = [f"v{i:02d}" for i in range(n)]
-        edges = {tuple(sorted(rng.sample(names, 2))) for _ in range(25)}
-        if trial == 3:  # adversarial chain: diameter n-1
-            edges = {(names[i], names[i + 1]) for i in range(n - 1)}
-        pairs = spark.createDataFrame(
-            sorted(edges), "norm_a string, norm_b string")
-        verts = spark.createDataFrame([(x,) for x in names], "norm string")
-        # force the distributed paths (local_threshold=0)
-        ml = connected_components(pairs, verts, max_iter=40,
-                                  local_threshold=0,
-                                  algorithm="min_label")
-        st = connected_components(pairs, verts, local_threshold=0,
-                                  algorithm="star")
-        def groups(df):
-            out = {}
-            for r in df.collect():
-                out.setdefault(r.component, set()).add(r.norm)
-            return {frozenset(v) for v in out.values()}
-        assert groups(ml) == groups(st), f"trial {trial}"
-
-
 def test_union_find_escape_hatch_agrees_with_distributed(spark):
     """The driver-side union-find (small-graph escape hatch) must
-    produce the same partition into components as both distributed
-    algorithms on random graphs — the three code paths are
-    interchangeable by size threshold, so they must agree."""
+    produce the same components as the distributed min-label loop on
+    random graphs and on a long chain (diameter 29, where min-label
+    needs O(diameter) rounds) — the two code paths are interchangeable
+    by size threshold, so they must agree."""
     import random
     rng = random.Random(777)
 
@@ -218,20 +195,21 @@ def test_union_find_escape_hatch_agrees_with_distributed(spark):
             out.setdefault(r.component, set()).add(r.norm)
         return {frozenset(v) for v in out.values()}
 
-    for trial in range(3):
+    for trial in range(4):
         n = 24
         names = [f"u{i:02d}" for i in range(n)]
         edges = {tuple(sorted(rng.sample(names, 2))) for _ in range(20)}
+        if trial == 3:  # adversarial chain: diameter n-1 = 29
+            n = 30
+            names = [f"v{i:02d}" for i in range(n)]
+            edges = {(names[i], names[i + 1]) for i in range(n - 1)}
         pairs = spark.createDataFrame(
             sorted(edges), "norm_a string, norm_b string")
         verts = spark.createDataFrame([(x,) for x in names], "norm string")
         uf = connected_components(pairs, verts)            # escape hatch
         ml = connected_components(pairs, verts, max_iter=40,
-                                  local_threshold=0,
-                                  algorithm="min_label")
-        st = connected_components(pairs, verts, local_threshold=0,
-                                  algorithm="star")
-        assert groups(uf) == groups(ml) == groups(st), f"trial {trial}"
+                                  local_threshold=0)
+        assert groups(uf) == groups(ml), f"trial {trial}"
 
 
 def test_min_label_warns_on_exhaustion(spark):
@@ -244,8 +222,8 @@ def test_min_label_warns_on_exhaustion(spark):
     verts = spark.createDataFrame([(x,) for x in names], "norm string")
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        connected_components(pairs, verts, max_iter=2, local_threshold=0,
-                             algorithm="min_label").collect()
+        connected_components(pairs, verts, max_iter=2,
+                             local_threshold=0).collect()
     assert any("max_iter" in str(x.message) for x in w)
 
 
@@ -502,7 +480,8 @@ def test_incremental_link_attach_drops_are_counted(spark):
     mo = {}
     _, delta = incremental_link(batch, existing, metrics_out=mo,
                                 max_bucket=1)
-    assert mo["dropped_bands_attach"] >= 1
+    # both norms share all 8 bands
+    assert mo["dropped_bands_attach"] == 8
     # with every old band over the cap, the near-dup went novel
     dm = {r.norm: r.node_id for r in delta.collect()}
     assert dm["aabaabx"] != "n1"

@@ -121,33 +121,57 @@ def test_pair_generator_sizing_carries_no_window(spark, monkeypatch):
     band key — a window colocates EVERY row of the most degenerate
     bucket on one task before the cap can drop it, exactly the failure
     the cap exists to prevent.  materialize_once is stubbed to identity
-    so the checkpoint cannot hide the sizing stage from the plan."""
+    in every module that calls it on these paths (the blocking
+    primitive included) so no checkpoint can hide the sizing stage from
+    the plan."""
+    import re
+
+    import ollie_spark.spark.blocking as blocking
     import ollie_spark.spark.linking as linking
     import ollie_spark.spark.textops as textops
 
-    monkeypatch.setattr(textops, "materialize_once", lambda df: df)
-    monkeypatch.setattr(linking, "materialize_once", lambda df: df)
+    for mod in (blocking, textops, linking):
+        monkeypatch.setattr(mod, "materialize_once", lambda df: df)
 
     docs = spark.createDataFrame(
         [("d1", "en", "a b c d e f"), ("d2", "en", "a b c d e g")],
         "doc_id string, lang string, text string")
     ents = spark.createDataFrame([("acme corp",), ("acme corporation",)],
                                  "norm string")
-    # max cap of 1 forces every bucket over the cap, so the filter join
-    # (and its groupBy sizing) stays in the returned plan — with the r7
+    # "aabaab" and "abaaba" share every band, so a cap of 1 drops all
+    # of the existing map's bands in the incremental attach tier
+    existing = spark.createDataFrame(
+        [("aabaab", "n1"), ("abaaba", "n1")], "norm string, node_id string")
+    batch = spark.createDataFrame(
+        [("Aabaabx", "made", "Widget", 0.9)],
+        "arg1_text string, rel_text string, arg2_text string, conf double")
+
+    def sizing(key):
+        # the cap's sizing aggregate: a count keyed on exactly the
+        # bucket key columns
+        cols = r", ".join(rf"{k}#\d+L?" for k in key)
+        return re.compile(
+            rf"HashAggregate\(keys=\[{cols}\], functions=\[count\(1\)\]")
+
+    # a cap of 1 forces buckets over the cap, so the filter join (and
+    # its groupBy sizing) stays in the returned plan — with the r7
     # identity-join skip, an uncapped-in-practice frame carries the
     # sizing only as an eager side job (still a groupBy, never a
     # window; the dropped==0 plans are covered by the next loop)
     frames = (
-        textops.minhash_band_pairs(docs, max_bucket=1),
-        textops.ngram_jaccard_pairs(docs, tc_bucket=16, max_block=1),
-        linking.lsh_candidate_pairs(ents, max_bucket=1),
+        (textops.minhash_band_pairs(docs, max_bucket=1), ["band_key"]),
+        (textops.ngram_jaccard_pairs(docs, tc_bucket=16, max_block=1),
+         ["lang", "_bkt"]),
+        (linking.lsh_candidate_pairs(ents, max_bucket=1), ["band_key"]),
+        (linking.incremental_link(batch, existing, max_bucket=1)[1],
+         ["band_key"]),
     )
-    for df in frames:
+    for df, key in frames:
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "Window" not in plan, \
             f"window-based bucket sizing returned:\n{plan}"
-        assert "HashAggregate" in plan  # the groupBy sizing is present
+        assert sizing(key).search(plan), \
+            f"no sizing aggregate keyed on {key}:\n{plan}"
     # dropped==0 short-circuit: the self-join reads the banded frame
     # directly, still with no window anywhere
     for df in (textops.minhash_band_pairs(docs),

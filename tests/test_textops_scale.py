@@ -8,16 +8,18 @@ multi-probe path recovers hyperplane-straddling near-dup pairs, and
 corpus makes them pass trivially at 0 rows).
 """
 
+from collections import Counter
+
 import duckdb
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entry_mod
-from ollie_spark.spark.textops import (auto_cell_bits,
+from ollie_spark.spark.textops import (_jaccard_blocked, _minhash_banded,
+                                       auto_cell_bits,
                                        embedding_neardup_pairs,
-                                       minhash_band_pairs,
-                                       minhash_dropped_bands, probe_cells,
+                                       minhash_band_pairs, probe_cells,
                                        sign_cell)
 
 
@@ -25,6 +27,23 @@ from ollie_spark.spark.textops import (auto_cell_bits,
 
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id string, text string")
+
+
+def _oversize(keys, cap):
+    """Buckets holding more than ``cap`` rows, counted in plain Python
+    over collected bucket keys — independent of the Spark sizing step
+    whose dropped count it checks."""
+    return sum(n > cap for n in Counter(keys).values())
+
+
+def _band_keys(docs):
+    return [r.band_key
+            for r in _minhash_banded(docs, "doc_id", "text").collect()]
+
+
+def _block_keys(docs, tc_bucket=None):
+    base, key_cols = _jaccard_blocked(docs, ("lang",), tc_bucket)
+    return [tuple(r) for r in base.select(*key_cols).collect()]
 
 
 def test_degenerate_band_is_capped_and_counted(spark):
@@ -35,22 +54,23 @@ def test_degenerate_band_is_capped_and_counted(spark):
     uniq = [(f"u{i}", f"unique document number {i} with distinct words "
              f"alpha{i} beta{i} gamma{i} delta{i}") for i in range(5)]
     docs = _docs(spark, same + uniq)
-    capped = minhash_band_pairs(docs, max_bucket=16)
+    mo = {}
+    capped = minhash_band_pairs(docs, max_bucket=16, metrics_out=mo)
     assert capped.count() == 0
-    assert minhash_dropped_bands(docs, max_bucket=16) > 0
-    # and the cap is observable as *absent* without the degenerate key
-    uncapped = minhash_band_pairs(docs, max_bucket=None)
+    assert mo["dropped_bands"] == _oversize(_band_keys(docs), 16) > 0
+    # and the cap is observable as *absent* with a cap above the
+    # input's 45 rows
+    uncapped = minhash_band_pairs(docs, max_bucket=1_000)
     assert uncapped.count() == 780
 
 
 def test_fused_metrics_agree_with_standalone(spark):
     """r5 judge item 1: the pair generators expose the dropped-bucket/
     block metric via metrics_out, derived from the generator's OWN
-    materialized sized frame — it must agree with the standalone
-    metric functions (which delegate to the same band/block
-    construction) on both firing and non-firing corpora."""
-    from ollie_spark.spark.textops import (ngram_dropped_blocks,
-                                           ngram_jaccard_pairs)
+    materialized sized frame — it must agree with a plain-Python count
+    of oversize buckets over the collected band/block keys on both
+    firing and non-firing corpora."""
+    from ollie_spark.spark.textops import ngram_jaccard_pairs
     same = [(f"d{i:03d}", "lorem ipsum dolor sit amet consectetur "
              "adipiscing elit sed do eiusmod") for i in range(40)]
     uniq = [(f"u{i}", f"unique document number {i} with distinct words "
@@ -59,10 +79,9 @@ def test_fused_metrics_agree_with_standalone(spark):
     mo = {}
     assert minhash_band_pairs(docs, max_bucket=16,
                               metrics_out=mo).count() == 0
-    assert mo["dropped_bands"] == minhash_dropped_bands(
-        docs, max_bucket=16) > 0
+    assert mo["dropped_bands"] == _oversize(_band_keys(docs), 16) > 0
     mo2 = {}
-    minhash_band_pairs(docs, max_bucket=None, metrics_out=mo2).count()
+    minhash_band_pairs(docs, max_bucket=1_000, metrics_out=mo2).count()
     assert mo2["dropped_bands"] == 0
 
     jdocs = spark.createDataFrame(
@@ -72,19 +91,23 @@ def test_fused_metrics_agree_with_standalone(spark):
         mo3 = {}
         ngram_jaccard_pairs(jdocs, threshold=0.5, max_block=16,
                             tc_bucket=tc_bucket, metrics_out=mo3).count()
-        assert mo3["dropped_blocks"] == ngram_dropped_blocks(
-            jdocs, max_block=16, tc_bucket=tc_bucket) == 1
+        assert mo3["dropped_blocks"] == _oversize(
+            _block_keys(jdocs, tc_bucket), 16) == 1
 
 
 def test_default_cap_preserves_small_scale_pairs(spark):
+    from ollie_spark.spark.textops import DEFAULT_MAX_BAND_BUCKET
     # clusters below the default cap are unaffected -> q12 oracle parity
     rows = [("a1", "the quick brown fox jumps over the lazy dog today"),
             ("a2", "the quick brown fox jumps over the lazy dog today"),
             ("b1", "completely different text about spark partitions")]
     docs = _docs(spark, rows)
-    assert ({(r.doc_a, r.doc_b) for r in minhash_band_pairs(docs).collect()}
+    mo = {}
+    assert ({(r.doc_a, r.doc_b)
+             for r in minhash_band_pairs(docs, metrics_out=mo).collect()}
             == {("a1", "a2")})
-    assert minhash_dropped_bands(docs) == 0
+    assert mo["dropped_bands"] == _oversize(
+        _band_keys(docs), DEFAULT_MAX_BAND_BUCKET) == 0
 
 
 # --------------------------------------------------- cell bit scaling
@@ -200,8 +223,7 @@ def test_degenerate_jaccard_block_is_capped_and_counted(spark):
     # 30 same-lang docs with IDENTICAL token counts share one (lang, tc)
     # block -> uncapped self-join would emit 30*29/2 = 435 pairs; a cap
     # below 30 drops the block and the drop is counted, never silent.
-    from ollie_spark.spark.textops import (ngram_dropped_blocks,
-                                           ngram_jaccard_pairs)
+    from ollie_spark.spark.textops import ngram_jaccard_pairs
     same = [(f"d{i:03d}", "en",
              "lorem ipsum dolor sit amet consectetur adipiscing elit")
             for i in range(30)]
@@ -209,20 +231,25 @@ def test_degenerate_jaccard_block_is_capped_and_counted(spark):
             ("u2", "en", "short text here")]
     docs = spark.createDataFrame(
         same + uniq, "doc_id string, lang string, text string")
-    capped = ngram_jaccard_pairs(docs, threshold=0.5, max_block=16)
+    mo = {}
+    capped = ngram_jaccard_pairs(docs, threshold=0.5, max_block=16,
+                                 metrics_out=mo)
     # the degenerate block is gone; the small block still pairs
     assert ({(r.doc_a, r.doc_b) for r in capped.collect()}
             == {("u1", "u2")})
-    assert ngram_dropped_blocks(docs, max_block=16) == 1
-    # cap observable as absent: uncapped emits the full quadratic set
-    uncapped = ngram_jaccard_pairs(docs, threshold=0.5, max_block=None)
+    assert mo["dropped_blocks"] == _oversize(_block_keys(docs), 16) == 1
+    # cap observable as absent: a cap above the input's 32 rows emits
+    # the full quadratic set
+    uncapped = ngram_jaccard_pairs(docs, threshold=0.5, max_block=1_000)
     assert uncapped.count() == 435 + 1
     # the bucketed path honors the same cap (anchor + probe excluded)
+    mo = {}
     bcapped = ngram_jaccard_pairs(docs, threshold=0.5, max_block=16,
-                                  tc_bucket=4)
+                                  tc_bucket=4, metrics_out=mo)
     assert ({(r.doc_a, r.doc_b) for r in bcapped.collect()}
             == {("u1", "u2")})
-    assert ngram_dropped_blocks(docs, max_block=16, tc_bucket=4) == 1
+    assert mo["dropped_blocks"] == _oversize(
+        _block_keys(docs, tc_bucket=4), 16) == 1
 
 
 def test_ngram_jaccard_tc_bucket_recovers_count_drift(spark):
@@ -772,7 +799,7 @@ def test_corpus_dedup_plans_carry_no_window(spark):
     """line_dedup / duplicate_span_stats count their (skewed) line and
     span keys with map-side-combining groupBys — a Window over the key
     would colocate every occurrence of the degenerate boilerplate line
-    on one task (the r6 _minhash_sized fix class).  The oracles DO
+    on one task (the r6 bucket-sizing fix class).  The oracles DO
     spell windows (DuckDB runs at oracle scale); Spark must not."""
     from ollie_spark.spark.textops import (duplicate_span_stats, line_dedup,
                                            plant_boilerplate)
@@ -914,17 +941,6 @@ def test_leakage_split_cap_hole_is_observable(spark):
     full = leakage_safe_split(docs, metrics_out=mo2)
     assert mo2["dropped_bands"] == 0
     assert {r.rep_id for r in full.collect()} == {0}
-
-
-def test_leakage_split_star_cc_equivalence(spark):
-    """cc_algorithm='star' (O(log n) rounds, the adversarial-chain
-    path) must produce the identical assignment."""
-    from ollie_spark.spark.textops import leakage_safe_split
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    base = sorted(map(tuple, leakage_safe_split(docs).collect()))
-    star = sorted(map(tuple, leakage_safe_split(
-        docs, cc_local_threshold=0, cc_algorithm="star").collect()))
-    assert base == star
 
 
 def test_curation_to_training_pipeline_end_to_end(spark):
