@@ -266,8 +266,10 @@ def q18_ann_cosine_topk(spark, sf_dir):
     Norms are precomputed per side (r7): the inline cosine re-ran the
     corpus row's norm AND the (constant) query norm once per row; the
     stored/broadcast norms leave one dot aggregate per row.  Values
-    are bit-identical (same aggregates, same sqrt-product division)."""
-    e = _spread(_t(spark, sf_dir, "embeddings")) \
+    are bit-identical (same aggregates, same sqrt-product division).
+    No parallelism floor: the round-robin exchange of spread_small_scan
+    cost more than it spread here (6 vs 2 Exchange nodes)."""
+    e = _t(spark, sf_dir, "embeddings") \
         .select("vec_id", F.transform("embedding",
                                       lambda x: x.cast("double"))
                 .alias("emb")) \
@@ -287,8 +289,9 @@ def q18_ann_cosine_topk(spark, sf_dir):
 def q19_ivf_bucketed_ann(spark, sf_dir):
     """IVF-style ANN: coarse cell = sign bits of the first 4 dims;
     search only the query's cell (the 100TB scale path: cells prune
-    the candidate set before any distance math)."""
-    e = _spread(_t(spark, sf_dir, "embeddings")) \
+    the candidate set before any distance math).  No parallelism
+    floor, as in q18."""
+    e = _t(spark, sf_dir, "embeddings") \
         .select("vec_id", F.transform("embedding",
                                       lambda x: x.cast("double"))
                 .alias("emb"))

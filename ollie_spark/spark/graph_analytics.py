@@ -36,8 +36,7 @@ PAGERANK_ITERATIONS = 10
 def pagerank(edges: DataFrame, src_col: str = "src_node",
              dst_col: str = "dst_node", weight_col: str | None = "weight",
              damping: float = PAGERANK_DAMPING,
-             iterations: int = PAGERANK_ITERATIONS,
-             caches_out: list | None = None) -> DataFrame:
+             iterations: int = PAGERANK_ITERATIONS) -> DataFrame:
     """Weighted PageRank by ``iterations`` rounds of power iteration;
     returns (node, rank) with ranks summing to 1.  Parallel edges are
     pre-aggregated; ``weight_col=None`` means unweighted (every edge
@@ -50,15 +49,8 @@ def pagerank(edges: DataFrame, src_col: str = "src_node",
     dangling vertices (one upfront count).  Superseded rank frames
     are unpersisted as soon as the next round materializes (the GraphX
     discipline), so a run holds at most two rank frames; the static
-    frames (edges, transitions, vertices, dangling set) land in
-    ``caches_out`` — canonicalize's convention — for callers that run
-    pagerank repeatedly in one session."""
-    def _mat(df):
-        out = materialize_once(df)
-        if caches_out is not None:
-            caches_out.append(out)
-        return out
-
+    frames (edges, transitions, vertices, dangling set) are each
+    materialized once."""
     w = (F.col(weight_col).cast("double") if weight_col
          else F.lit(1.0))
     # non-positive weights are dropped BEFORE aggregation (r7, advisor
@@ -69,17 +61,17 @@ def pagerank(edges: DataFrame, src_col: str = "src_node",
     # edge simply is not an edge: its source (if it remains in the
     # graph at all) becomes dangling, and a vertex touching only
     # non-positive edges leaves the vertex set.
-    e = _mat(
+    e = materialize_once(
         edges.select(F.col(src_col).alias("_s"),
                      F.col(dst_col).alias("_d"), w.alias("_w"))
         .where(F.col("_w") > 0)
         .groupBy("_s", "_d").agg(F.sum("_w").alias("_w")))
     out_w = e.groupBy("_s").agg(F.sum("_w").alias("_ow"))
     # normalized edge transition fraction, computed once
-    trans = _mat(
+    trans = materialize_once(
         e.join(out_w, "_s").select(
             "_s", "_d", (F.col("_w") / F.col("_ow")).alias("_frac")))
-    verts = _mat(
+    verts = materialize_once(
         e.select(F.col("_s").alias("node"))
         .union(e.select(F.col("_d").alias("node"))).distinct())
     n = verts.count()
@@ -87,7 +79,7 @@ def pagerank(edges: DataFrame, src_col: str = "src_node",
         return verts.select("node", F.lit(1.0).alias("rank"))
     # dangling-node set, materialized once: the per-round dangling
     # term must not re-aggregate out-weights over the edge frame
-    dangling_nodes = _mat(
+    dangling_nodes = materialize_once(
         verts.join(out_w.select(F.col("_s").alias("node")),
                    "node", "left_anti"))
     any_dangling = dangling_nodes.count() > 0
@@ -123,8 +115,7 @@ def pagerank(edges: DataFrame, src_col: str = "src_node",
 
 def kg_training_pairs(edges: DataFrame, src_col: str = "src_node",
                       rel_col: str = "rel", dst_col: str = "dst_node",
-                      bucket_hex: int = 1,
-                      caches_out: list | None = None) -> DataFrame:
+                      bucket_hex: int = 1) -> DataFrame:
     """(src, rel, dst, label) training pairs for KG-embedding models
     (TransE-style): every distinct positive triple plus one FILTERED
     corrupted negative — the destination replaced by a pseudo-random
@@ -150,8 +141,6 @@ def kg_training_pairs(edges: DataFrame, src_col: str = "src_node",
         edges.select(F.col(src_col).alias("src"),
                      F.col(rel_col).alias("rel"),
                      F.col(dst_col).alias("dst")).distinct())
-    if caches_out is not None:
-        caches_out.append(pos)
     nodes = (pos.select(F.col("src").alias("node"))
              .union(pos.select(F.col("dst").alias("node"))).distinct()
              .withColumn("_b", F.substring(F.md5("node"),

@@ -8,9 +8,9 @@ web corpus) cannot pin a single reducer.
 
 Scale notes (100 TB / 10^12 docs):
 - MinHash signatures are computed **without any explode or shuffle**:
-  one `transform`/`array_min` expression per hash seed over the char
-  3-gram array — pure whole-stage-codegen map work over the *distinct*
-  entity strings (cardinality « mention count).
+  one `aggregate` fold over the char 3-gram array keeps a running
+  per-seed minimum for every hash slot — pure map work over the
+  *distinct* entity strings (cardinality « mention count).
 - LSH banding self-joins on the band key only (blocking.
   bucket_self_join); hot buckets are capped (and counted via
   `dropped_buckets`) so one degenerate band cannot produce O(n^2)
@@ -19,6 +19,9 @@ Scale notes (100 TB / 10^12 docs):
   join+agg rounds, tiny for shallow star-like near-dup blocks, with a
   loud warning if max_iter exhausts — or, for small pair sets, a
   driver-side union-find that converges to the same labels.
+- Gram arrays and band keys are built ONLY by the Spark expressions
+  `_char3_grams` / `_minhash_grams` / `_band`; the small-input driver
+  hatch collects their output (`_cluster_norms` picks the path).
 - The final mentions->canonical join salts the canonical map S ways and
   hashes mentions into the same salt space: mention skew spreads over S
   reducers while the map side only replicates S×.  AQE skew-join stays
@@ -32,6 +35,9 @@ this stage is the distributed generalization the north_rule requires.
 
 from __future__ import annotations
 
+from collections import defaultdict
+from itertools import combinations
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -40,6 +46,9 @@ from ollie_spark.spark.materialize import materialize_once
 
 DETERMINERS = ("the", "a", "an", "this", "that", "these", "those", "some",
                "any", "each", "every", "its", "his", "her", "their", "our")
+
+# at or below this many distinct norms, blocking + CC run on the driver
+LOCAL_BLOCKING_THRESHOLD = 2_000
 
 
 def normalize_entity(col):
@@ -134,19 +143,25 @@ def minhash_signature(df: DataFrame, col: str = "norm",
     return _minhash_grams(df, col, num_hashes).drop("_grams")
 
 
+def _band_keys(num_hashes: int, bands: int):
+    """array<bigint> of the ``bands`` band keys of the ``sig`` column:
+    band b hashes its comma-joined signature slots with seed b."""
+    rows = num_hashes // bands
+    return F.array(*[
+        F.xxhash64(F.concat_ws(
+            ",", *[F.element_at("sig", b * rows + r + 1).cast("string")
+                   for r in range(rows)]), F.lit(b))
+        for b in range(bands)])
+
+
 def _band(sigs: DataFrame, num_hashes: int, bands: int,
           *cols: str) -> DataFrame:
     """(*cols, band_key): one row per band of each signature — the
     SINGLE band construction the pair generator, the dropped-bucket
-    metric and the incremental path all read."""
-    rows = num_hashes // bands
+    metric, the incremental path and the driver hatch all read (the
+    hatch collects :func:`_band_keys` unexploded)."""
     return sigs.select(
-        *cols,
-        F.explode(F.array(*[
-            F.xxhash64(F.concat_ws(
-                ",", *[F.element_at("sig", b * rows + r + 1).cast("string")
-                       for r in range(rows)]), F.lit(b))
-            for b in range(bands)])).alias("band_key"))
+        *cols, F.explode(_band_keys(num_hashes, bands)).alias("band_key"))
 
 
 def _lsh_banded(entities: DataFrame, num_hashes: int,
@@ -379,79 +394,89 @@ def _union_find(edges) -> dict:
     return {v: find(v) for v in parent}
 
 
-def _local_blocking_components(norms, num_hashes: int = 16,
+def _local_blocking_components(entities: DataFrame, num_hashes: int = 16,
                                bands: int = 8,
                                jaccard_threshold: float = 0.5,
                                max_bucket: int = 64):
-    """Driver-side replica of lsh_candidate_pairs + connected_components
-    over a small distinct-norm list -> ([(norm, component)], dropped).
+    """Driver-side lsh_candidate_pairs + connected_components over a
+    small distinct-``norm`` frame -> ([(norm, component)], dropped).
 
-    Value-identical to the distributed path by construction: signatures
-    use the bit-exact xxhash64 replica (ollie_spark.spark.xxh64, parity
-    property-tested against F.xxhash64), band keys hash the same
-    comma-joined signature-slot strings (Long.toString == str(int) for
-    every long), buckets over max_bucket are dropped and counted the
-    same way, candidate pairs are verified with the same exact
-    char-3-gram Jaccard, and components are :func:`_union_find` — the
-    same labels the distributed min-label loop converges to.
-    Equivalence on real corpus norms is pinned by
-    test_linking.test_local_blocking_matches_distributed.
+    ONE collect brings back ``(norm, _grams, band keys)`` per norm from
+    the distributed path's own expressions (:func:`_minhash_grams`,
+    :func:`_band_keys`); only the post-hash steps run here: bucket,
+    drop and count buckets over ``max_bucket``, pair, verify exact
+    Jaccard on the collected grams, :func:`_union_find`.  Equivalence
+    is pinned by test_linking's local-blocking tests.
 
-    Cost model: ~(len(norm) shingles x (1 byte-hash + num_hashes int
-    finalizers)) per norm in pure python — ~0.5 ms/norm at the default
-    16 hashes, so the default canonicalize threshold (2,000 norms,
-    ~1 s single-core, a few hundred KB of driver memory) stays well
-    under the distributed path's ~5 s of fixed job overhead."""
-    from collections import defaultdict
-
-    from .xxh64 import hash_bytes, hash_int, SPARK_SEED
-
-    rows_per = num_hashes // bands
-
-    def signed(h):
-        return h - (1 << 64) if h >= (1 << 63) else h
-
-    def grams(norm):
-        if len(norm) < 3:
-            return {norm}
-        return {norm[i:i + 3] for i in range(len(norm) - 2)}
-
+    Driver memory: the collected rows, one gram set per norm and the
+    bucket lists, linear in the norm count.  Measured (tracemalloc
+    peak, 16 hashes / 8 bands, ~21-char open-vocabulary norms): 9.5 MB
+    at LOCAL_BLOCKING_THRESHOLD (2,000 norms), ~4.7 KB per norm.
+    Candidate pairs are bounded by the cap — each norm pairs with at
+    most bands x (max_bucket - 1) others, so at most 504k pairs (~45
+    MB of pair tuples) at 2,000 norms even if every bucket were full."""
+    rows = (_minhash_grams(entities.select("norm"), "norm", num_hashes)
+            .select("norm", "_grams",
+                    _band_keys(num_hashes, bands).alias("_keys"))
+            .collect())
+    grams = {r.norm: set(r._grams) for r in rows}
     buckets = defaultdict(list)
-    gram_cache = {}
-    for norm in norms:
-        sh = grams(norm)
-        gram_cache[norm] = sh
-        # xxhash64(shingle, seed) chains: bytes-hash once per shingle,
-        # then one int finalizer per seed
-        sig = [None] * num_hashes
-        for g in sh:
-            hb = hash_bytes(g.encode("utf-8"), SPARK_SEED)
-            for s in range(num_hashes):
-                v = signed(hash_int(s, hb))
-                if sig[s] is None or v < sig[s]:
-                    sig[s] = v
-        for b in range(bands):
-            key = ",".join(str(sig[b * rows_per + r])
-                           for r in range(rows_per))
-            bk = hash_int(b, hash_bytes(key.encode("utf-8"), SPARK_SEED))
-            buckets[bk].append(norm)
+    for r in rows:
+        for k in r._keys:
+            buckets[k].append(r.norm)
 
     dropped = 0
     cand = set()
     for members in buckets.values():
         if len(members) > max_bucket:
             dropped += 1
-            continue
-        uniq = sorted(set(members))
-        for i, a in enumerate(uniq):
-            for b in uniq[i + 1:]:
-                cand.add((a, b))
+        else:
+            cand.update(combinations(sorted(set(members)), 2))
 
     roots = _union_find(
         (a, b) for a, b in cand
-        if len(gram_cache[a] & gram_cache[b])
-        / len(gram_cache[a] | gram_cache[b]) >= jaccard_threshold)
-    return [(n, roots.get(n, n)) for n in norms], dropped
+        if len(grams[a] & grams[b]) / len(grams[a] | grams[b])
+        >= jaccard_threshold)
+    return [(n, roots.get(n, n)) for n in grams], dropped
+
+
+def _cluster_norms(entities: DataFrame, n_norms: int, num_hashes: int,
+                   bands: int, jaccard_threshold: float, max_bucket: int,
+                   local_threshold: int) -> tuple:
+    """-> (comp, dropped): (norm, component) per norm of the distinct-
+    ``norm`` frame ``entities`` (``n_norms`` rows) and the buckets the
+    cap dropped.  The ONE hatch-or-distributed switch (canonicalize and
+    incremental_link's novel tier): the driver hatch at or below
+    ``local_threshold`` norms, else lsh_candidate_pairs + CC."""
+    if n_norms <= local_threshold:
+        rows, dropped = _local_blocking_components(
+            entities, num_hashes, bands, jaccard_threshold, max_bucket)
+        return _driver_components(entities.sparkSession, rows), dropped
+    mo = {}
+    pairs = lsh_candidate_pairs(entities, num_hashes=num_hashes,
+                                bands=bands,
+                                jaccard_threshold=jaccard_threshold,
+                                max_bucket=max_bucket, metrics_out=mo)
+    return connected_components(pairs, entities), mo["dropped_buckets"]
+
+
+def _normalized(mentions: DataFrame, caches_out: list | None):
+    """``mentions`` + normalized ``_a1`` / ``_a2``, materialized once
+    (recorded in ``caches_out``).  Without the barrier every consumer
+    re-ran the regex chain: filters/join keys on an aliased column are
+    re-inlined (PushDownPredicate, CLAUDE.md) — 21s + 17s + 17s vs one
+    ~10s pass at 480k docs / 16 cores.  The shuffle-free coalesce to
+    defaultParallelism (a no-op on clusters) stops extraction's
+    cores*4 partitions becoming mostly-empty tasks in every consumer
+    (r7 A/B: canonicalize 4.4-8.6 -> 2.2-3.2 s, identical outputs)."""
+    cores = mentions.sparkSession.sparkContext.defaultParallelism
+    m_ann = materialize_once(
+        mentions.coalesce(max(int(cores), 1))
+        .withColumn("_a1", normalize_entity(F.col("arg1_text")))
+        .withColumn("_a2", normalize_entity(F.col("arg2_text"))))
+    if caches_out is not None:
+        caches_out.append(m_ann)
+    return m_ann
 
 
 def salted_join(big: DataFrame, small: DataFrame, key: str,
@@ -483,7 +508,7 @@ def canonicalize(mentions: DataFrame, num_hashes: int = 16,
                  broadcast_map_threshold: int = 1_000_000,
                  metrics_out: dict | None = None,
                  caches_out: list | None = None,
-                 local_blocking_threshold: int = 2_000):
+                 local_blocking_threshold: int = LOCAL_BLOCKING_THRESHOLD):
     """-> (linked_mentions, nodes, edges) DataFrames.
 
     nodes(node_id, canonical, aliases, mention_count)
@@ -500,13 +525,16 @@ def canonicalize(mentions: DataFrame, num_hashes: int = 16,
       sides back, rejoin on row_key.  One full-row shuffle instead of
       two, and the skewed lookup shuffles only narrow rows.
 
+    Blocking + CC run on the driver at or below
+    ``local_blocking_threshold`` distinct norms (:func:`_cluster_norms`).
+
     ``metrics_out`` (optional dict) receives the stage wall-time split
     — ``normalize_sec`` (one materialized pass of argument
     normalization that every downstream consumer reads),
     ``lsh_cc_sec`` (blocking + connected components, eager) and
     ``canon_map_sec`` (canonical-map materialize + count) — plus
-    ``dropped_buckets``, counted off the blocking stage's own
-    materialized band frame (no second signature computation).
+    ``dropped_buckets``, counted by the blocking stage itself (no
+    second signature computation).
 
     ``caches_out`` (optional list) receives the two full-corpus cached
     frames this call creates — ``m_ann`` (annotated mentions) and
@@ -520,34 +548,8 @@ def canonicalize(mentions: DataFrame, num_hashes: int = 16,
     """
     import time as _time
 
-    # annotate + MATERIALIZE the normalized argument columns ONCE: a
-    # filter or join key on an aliased computed column is pushed
-    # through the projection and re-inlined (PushDownPredicate — the
-    # Catalyst CSE trap, CLAUDE.md), so without a materialization
-    # barrier the 4-regex normalize chain ran 2-3x per row per
-    # consumer AND the counts rollup, the linked join, and the edges
-    # rollup each re-evaluated the whole normalization from scratch
-    # (measured 21s + 17s + 17s per evaluation at 480k docs / 16
-    # cores; the one materialized pass is ~10s and every downstream
-    # evaluation reads stored columns).
     t0 = _time.monotonic()
-    # partitioning of the stored normalized frame is CORES-derived
-    # (r7): extraction hands over cores*4 partitions (even-CPU-bound
-    # tasking is right for the python stage), but every downstream
-    # consumer of the checkpoint — the counts agg, the link join, the
-    # edges rollup — then schedules that many mostly-empty map tasks
-    # per job.  coalesce to defaultParallelism (shuffle-free merge,
-    # no-op when the input already has <= that many partitions, so a
-    # big cluster keeps its parallelism) halved the canonicalize wall
-    # at sandbox scale (interleaved A/B: 4.4-8.6 -> 2.2-3.2 s,
-    # identical outputs).
-    cores = mentions.sparkSession.sparkContext.defaultParallelism
-    m_ann = materialize_once(
-        mentions.coalesce(max(int(cores), 1))
-        .withColumn("_a1", normalize_entity(F.col("arg1_text")))
-        .withColumn("_a2", normalize_entity(F.col("arg2_text"))))
-    if caches_out is not None:
-        caches_out.append(m_ann)
+    m_ann = _normalized(mentions, caches_out)
     if metrics_out is not None:
         metrics_out["normalize_sec"] = round(_time.monotonic() - t0, 3)
 
@@ -568,33 +570,15 @@ def canonicalize(mentions: DataFrame, num_hashes: int = 16,
               .agg(F.max_by("text", F.struct("count", "text"))
                    .alias("surface"),
                    F.sum("count").alias("n"))).persist()
-    entities = counts.select("norm")
     t0 = _time.monotonic()
-    # small-distinct-entity escape hatch (r7): below the threshold the
-    # whole blocking stage — banding, bucket sizing/cap, candidate
-    # self-join, Jaccard verification AND connected components —
-    # resolves driver-side in one collect, exactly like the union-find
-    # hatch inside connected_components (value-identical by the
-    # bit-exact xxhash64 replica; see _local_blocking_components).
-    # The distributed path below is unchanged, plan-pinned
-    # (tests/test_plans.py), and remains the path for real entity
-    # populations; the count that gates the switch also materializes
-    # the persisted counts frame, which the distributed path needs
-    # anyway.  Driver cost at the threshold: ~1 s and a few hundred KB
-    # (2,000 norms).
-    n_entities = counts.count()
-    if n_entities <= local_blocking_threshold:
-        norms = [r.norm for r in entities.collect()]
-        comp_rows, dropped = _local_blocking_components(
-            norms, num_hashes=num_hashes, bands=bands)
-        if metrics_out is not None:
-            metrics_out["dropped_buckets"] = dropped
-        comp = _driver_components(mentions.sparkSession, comp_rows)
-    else:
-        pairs = lsh_candidate_pairs(entities, num_hashes=num_hashes,
-                                    bands=bands, metrics_out=metrics_out)
-        comp = connected_components(pairs, entities)
+    # the count that gates the hatch-or-distributed switch also
+    # materializes the persisted counts frame, which both paths read
+    comp, dropped = _cluster_norms(
+        counts.select("norm"), counts.count(), num_hashes, bands,
+        jaccard_threshold=0.5, max_bucket=64,
+        local_threshold=local_blocking_threshold)
     if metrics_out is not None:
+        metrics_out["dropped_buckets"] = dropped
         metrics_out["lsh_cc_sec"] = round(_time.monotonic() - t0, 3)
 
     # the canonical map is per-distinct-entity (small next to mentions)
@@ -630,9 +614,7 @@ def canonicalize(mentions: DataFrame, num_hashes: int = 16,
     # both link paths read the materialized normalized frame — no
     # re-normalization, and the edges rollup's repeated evaluations of
     # `linked` scan stored columns instead of re-running the pipeline
-    m = m_ann
-
-    linked = _link_join(m, norm_to_node, n_map,
+    linked = _link_join(m_ann, norm_to_node, n_map,
                         broadcast_map_threshold, salt)
 
     edges = (linked.groupBy(
@@ -685,8 +667,9 @@ def incremental_link(new_mentions: DataFrame, existing_map: DataFrame,
        blocking + the SAME char-3-gram Jaccard verification as the
        batch path) -> the existing node_id, MIN across multiple
        matches (deterministic greedy tie rule);
-    3. novel: the remainder clusters among ITSELF (lsh_candidate_pairs
-       + connected_components) and mints new node ids.  A new id is a
+    3. novel: the remainder clusters among ITSELF (the same
+       hatch-or-distributed clustering step as canonicalize,
+       :func:`_cluster_norms`) and mints new node ids.  A new id is a
        min-norm component label over norms disjoint from the map, and
        every existing id is a min-norm over mapped norms — so fresh
        ids cannot collide with existing ones.
@@ -725,14 +708,7 @@ def incremental_link(new_mentions: DataFrame, existing_map: DataFrame,
             caches_out.append(out)
         return out
 
-    # cores-derived partitioning for the stored normalized frame —
-    # same rationale and same no-op-on-clusters guarantee as
-    # canonicalize's spelling (r7)
-    cores = new_mentions.sparkSession.sparkContext.defaultParallelism
-    m_ann = _mat(
-        new_mentions.coalesce(max(int(cores), 1))
-        .withColumn("_a1", normalize_entity(F.col("arg1_text")))
-        .withColumn("_a2", normalize_entity(F.col("arg2_text"))))
+    m_ann = _normalized(new_mentions, caches_out)
     norms = (m_ann.select(F.col("_a1").alias("norm"))
              .unionByName(m_ann.select(F.col("_a2").alias("norm")))
              .where(F.col("norm") != "").distinct())
@@ -822,12 +798,10 @@ def incremental_link(new_mentions: DataFrame, existing_map: DataFrame,
         metrics_out["n_attached_hop2"] = hop2.count()
 
     novel = _mat(unknown.join(attached, "norm", "left_anti"))
-    pairs = lsh_candidate_pairs(novel, num_hashes=num_hashes,
-                                bands=bands,
-                                jaccard_threshold=jaccard_threshold,
-                                max_bucket=max_bucket,
-                                metrics_out=metrics_out)
-    comp = connected_components(pairs, novel)
+    n_novel = novel.count()
+    comp, dropped = _cluster_norms(
+        novel, n_novel, num_hashes, bands, jaccard_threshold, max_bucket,
+        local_threshold=LOCAL_BLOCKING_THRESHOLD)
     fresh = comp.select("norm", F.col("component").alias("node_id"))
 
     delta_map = _mat(attached.unionByName(fresh))
@@ -836,7 +810,8 @@ def incremental_link(new_mentions: DataFrame, existing_map: DataFrame,
     if metrics_out is not None:
         metrics_out["n_exact"] = norms.count() - unknown.count()
         metrics_out["n_attached"] = attached.count()
-        metrics_out["n_novel"] = novel.count()
+        metrics_out["n_novel"] = n_novel
+        metrics_out["dropped_buckets"] = dropped
     linked = _link_join(m_ann, full_map, n_map,
                         broadcast_map_threshold, salt)
     return linked, delta_map

@@ -76,23 +76,10 @@ class StageWriter:
             (stage, bucket, rows, wall_ms, run_id, ts)
     """
 
-    def __init__(self, spark: SparkSession, root: str, n_buckets: int = 16,
-                 align_writes: bool = True):
+    def __init__(self, spark: SparkSession, root: str, n_buckets: int = 16):
         self.spark = spark
         self.root = str(root)
         self.n_buckets = n_buckets
-        # bucket-aligned writes: shuffle each stage's rows onto their
-        # bucket before partitionBy, so one task owns one bucket dir.
-        # Without this every upstream task writes a sliver file into
-        # EVERY bucket dir (tasks x buckets tiny files) and the
-        # manifest count read-back re-lists them all — the dominant
-        # fixed cost of the KB-scale edges/nary stages in the full-job
-        # bench.  The shuffle moves each row once; at production scale
-        # n_buckets is sized so one bucket ~ one task's worth of data
-        # (the bucket is the unit of recovery AND of write
-        # parallelism), so no parallelism is lost.  The flag exists
-        # for A/B measurement, not production use.
-        self.align_writes = align_writes
         spark.conf.set("spark.sql.sources.partitionOverwriteMode",
                        "dynamic")
 
@@ -163,11 +150,18 @@ class StageWriter:
         bucketed = with_bucket(df, self.n_buckets, key=key)
         if len(pending) < self.n_buckets:
             bucketed = bucketed.where(F.col("bucket").isin(pending))
-        if self.align_writes:
-            # CPU-heavy upstream work (extraction UDFs) still runs at
-            # full parallelism in the map side of this shuffle; only
-            # the parquet-write stage narrows to one task per bucket
-            bucketed = bucketed.repartition(len(pending), "bucket")
+        # bucket-aligned writes: shuffle each row onto its bucket
+        # before partitionBy, so one task owns one bucket dir.  Without
+        # this every upstream task writes a sliver file into EVERY
+        # bucket dir (tasks x buckets tiny files) and the manifest
+        # count read-back re-lists them all — the dominant fixed cost
+        # of the KB-scale edges/nary stages in the full-job bench.  At
+        # production scale n_buckets is sized so one bucket ~ one
+        # task's worth of data (the bucket is the unit of recovery AND
+        # of write parallelism), so no parallelism is lost; CPU-heavy
+        # upstream work (extraction UDFs) still runs at full
+        # parallelism in the map side of this shuffle.
+        bucketed = bucketed.repartition(len(pending), "bucket")
 
         t0 = time.monotonic()
         (bucketed.write.mode("overwrite")

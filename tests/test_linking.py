@@ -593,33 +593,6 @@ def test_incremental_link_randomized_stability_properties(spark):
 
 # ------------------------- r7: local blocking escape hatch equivalence
 
-def test_python_xxhash64_matches_spark(spark):
-    """The pure-python xxhash64 replica (xxh64.py) must be bit-exact
-    against F.xxhash64 for the field shapes the blocking stage hashes:
-    (string,), (string, int literal) — plus unicode/empty edge cases
-    the ASCII norms never hit, so the parity is not corpus-shaped."""
-    import random
-    import string as _string
-
-    from ollie_spark.spark.xxh64 import xxhash64
-
-    rng = random.Random(99)
-    cases = ["", "a", "ab", "abc", "héllo ☃ 中文",
-             "x" * 31, "x" * 32, "x" * 33, "y" * 100]
-    cases += ["".join(rng.choice(_string.printable)
-                      for _ in range(rng.randrange(0, 64)))
-              for _ in range(40)]
-    df = spark.createDataFrame([(s,) for s in cases], "s string")
-    rows = df.select(
-        "s", F.xxhash64("s").alias("h0"),
-        *[F.xxhash64("s", F.lit(i)).alias(f"h{i + 1}")
-          for i in range(4)]).collect()
-    for r in rows:
-        assert xxhash64(r.s) == r.h0, repr(r.s)
-        for i in range(4):
-            assert xxhash64(r.s, i) == r[f"h{i + 1}"], (repr(r.s), i)
-
-
 def test_local_blocking_matches_distributed(spark, mentions):
     """canonicalize's r7 small-entity escape hatch must produce the
     SAME nodes/edges/linked rows and the same dropped_buckets metric
@@ -649,11 +622,15 @@ def test_local_blocking_matches_distributed(spark, mentions):
 def test_local_blocking_short_and_colliding_norms(spark):
     """Hatch vs distributed on adversarial synthetic norms: shorter
     than one shingle (len < 3), exact duplicates of surface forms,
-    near-dup chains, and disjoint singletons."""
+    near-dup chains, disjoint singletons, and non-ASCII / CJK text
+    (normalization maps non-[a-z0-9] characters to spaces, so é and
+    CJK surfaces exercise the split-and-trim edges of the norms)."""
     triples = [
         ("ab", "r", "acme corp"), ("ab", "r", "acme corporation"),
         ("acme corporatio", "r", "zz"), ("x", "r", "unrelated thing"),
         ("1 2 3 4", "r", "1 2 3 5"),
+        ("café société", "r", "cafe societe"), ("é", "r", "中文"),
+        ("中文 abc 字", "r", "abc 字符 de"), ("ré sumé", "r", "résumé"),
     ]
     rows = [(f"d{i}", 0, a, r, b, 0.9, 0.9, "p")
             for i, (a, r, b) in enumerate(triples)]
@@ -671,6 +648,65 @@ def test_local_blocking_short_and_colliding_norms(spark):
                  for r in edges.collect()})
 
     assert run(10_000) == run(0)
+
+
+def test_local_blocking_cap_matches_distributed(spark):
+    """With a small max_bucket the cap fires: the driver hatch must drop
+    exactly the buckets the distributed lsh_candidate_pairs drops (a
+    bucket of exactly max_bucket rows is kept) and resolve the same
+    components.  Norms with one char-3-gram set share every band, so
+    {aabaab, abaaba, baabaa} fills 8 buckets of 3 (over a cap of 2)
+    and {xxyxxy, xyxxyx} fills 8 buckets of exactly 2 (kept).  The
+    non-ASCII norms reach the hatch unnormalized, so its grams are
+    Spark's character substrings of é / CJK text."""
+    from ollie_spark.spark.linking import _local_blocking_components
+
+    norms = ["aabaab", "abaaba", "baabaa", "xxyxxy", "xyxxyx",
+             "acme corp", "acme corporation", "zebra",
+             "café", "cafés", "中文字", "中文字符"]
+    ents = spark.createDataFrame([(n,) for n in norms], "norm string")
+    rows, dropped = _local_blocking_components(ents, max_bucket=2)
+    mo = {}
+    pairs = lsh_candidate_pairs(ents, max_bucket=2, metrics_out=mo)
+    want = {(r.norm, r.component)
+            for r in connected_components(pairs, ents).collect()}
+    assert set(rows) == want
+    assert dropped == mo["dropped_buckets"] == 8
+    comp = dict(rows)
+    assert comp["xyxxyx"] == comp["xxyxxy"] == "xxyxxy"
+    assert len({comp["aabaab"], comp["abaaba"], comp["baabaa"]}) == 3
+
+
+def test_incremental_link_novel_tier_hatch_matches_distributed(
+        spark, monkeypatch):
+    """incremental_link's novel tier runs the same clustering switch as
+    canonicalize: the driver hatch (default) and the forced distributed
+    path must mint the identical delta_map."""
+    from ollie_spark.spark import linking
+
+    existing = spark.createDataFrame(
+        [("barack obama", "barack obama")], "norm string, node_id string")
+    batch = _mention_frame(spark, [
+        ("Barack H Obama", "met", "Acme Corp"),
+        ("Acme Corporation", "sued", "Globex"),
+        ("Globex Inc", "hired", "Hank Scorpio"),
+        ("Café Société", "r", "cafe societe"),
+        ("Initech Corporation", "r", "Initech Corporations"),
+    ])
+
+    def delta(mo):
+        _, d = linking.incremental_link(batch, existing, metrics_out=mo)
+        return {(r.norm, r.node_id) for r in d.collect()}
+
+    mo_hatch, mo_dist = {}, {}
+    hatch = delta(mo_hatch)
+    monkeypatch.setattr(linking, "LOCAL_BLOCKING_THRESHOLD", -1)
+    dist = delta(mo_dist)
+    assert hatch == dist
+    dm = dict(hatch)
+    assert dm["initech corporations"] == dm["initech corporation"]
+    assert mo_hatch["n_novel"] == mo_dist["n_novel"] >= 4
+    assert mo_hatch["dropped_buckets"] == mo_dist["dropped_buckets"]
 
 
 # ------------------------- stored-gram verification + empty inputs
