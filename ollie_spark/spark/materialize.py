@@ -150,18 +150,20 @@ class StageWriter:
         bucketed = with_bucket(df, self.n_buckets, key=key)
         if len(pending) < self.n_buckets:
             bucketed = bucketed.where(F.col("bucket").isin(pending))
-        # bucket-aligned writes: shuffle each row onto its bucket
-        # before partitionBy, so one task owns one bucket dir.  Without
-        # this every upstream task writes a sliver file into EVERY
-        # bucket dir (tasks x buckets tiny files) and the manifest
-        # count read-back re-lists them all — the dominant fixed cost
-        # of the KB-scale edges/nary stages in the full-job bench.  At
-        # production scale n_buckets is sized so one bucket ~ one
-        # task's worth of data (the bucket is the unit of recovery AND
-        # of write parallelism), so no parallelism is lost; CPU-heavy
-        # upstream work (extraction UDFs) still runs at full
-        # parallelism in the map side of this shuffle.
-        bucketed = bucketed.repartition(len(pending), "bucket")
+        # bucket-aligned writes: hash-shuffle on the bucket column
+        # before partitionBy, so all rows of a bucket land in one
+        # shuffle partition and each bucket dir gets exactly one file
+        # per run.  Without this every upstream task writes a sliver
+        # file into EVERY bucket dir (tasks x buckets tiny files) and
+        # the manifest count read-back re-lists them all.  The task
+        # count is left to AQE: a by-column repartition is only ever
+        # coalesced, never split (skew splitting applies to joins and
+        # REBALANCE only), so a task may own several buckets but a
+        # bucket never spans two tasks.  At KB scale that is ~1 write
+        # task instead of one per bucket, leaving cores to the stages
+        # build_graph writes concurrently; upstream work (extraction
+        # UDFs) keeps its full parallelism on the map side.
+        bucketed = bucketed.repartition("bucket")
 
         t0 = time.monotonic()
         (bucketed.write.mode("overwrite")
@@ -177,7 +179,10 @@ class StageWriter:
         # pandas/Arrow: a plain-list createDataFrame is a pickled
         # python RDD whose write spins python workers (seconds of
         # fixed per-stage latency); the Arrow path is a JVM
-        # LocalRelation (see linking.connected_components)
+        # LocalRelation (see linking.connected_components).  That
+        # relation is sliced into defaultParallelism partitions, so
+        # coalesce(1) to append one manifest file per run, not one
+        # per core.
         import pandas as pd
 
         manifest = self.spark.createDataFrame(pd.DataFrame(
@@ -187,7 +192,8 @@ class StageWriter:
                      "ts", "n_buckets"])
             .astype({"bucket": "int32", "rows": "int64",
                      "wall_ms": "int64", "n_buckets": "int32"}))
-        manifest.write.mode("append").parquet(self._manifest(stage))
+        (manifest.coalesce(1).write.mode("append")
+         .parquet(self._manifest(stage)))
         return {"stage": stage, "buckets": pending,
                 "rows": int(sum(counts.values())), "wall_ms": wall_ms,
                 "run_id": run_id}

@@ -1,10 +1,11 @@
 """The extraction pipeline: documents -> sentences -> mentions.
 
 Spark shape (SURVEY.md §3.1): ``documents`` scan -> ``posexplode(spans)``
--> parse UDF -> extract UDF -> native confidence expression -> filter.
-The only Python is two Arrow-batched ``mapInPandas`` stages (parse,
-extract); scoring is a Spark SQL dot-product + sigmoid so it stays in
-whole-stage codegen.  No shuffle anywhere in this file — extraction is
+-> parse + extract UDF -> native confidence expression -> filter.
+The only Python is one Arrow-batched ``mapInPandas`` stage that parses
+and extracts each batch (plus the opt-in sentence-segmentation stage);
+scoring is a Spark SQL dot-product + sigmoid so it stays in whole-stage
+codegen.  No shuffle anywhere in this file — extraction is
 embarrassingly parallel per input partition; shuffles first appear in
 linking/nary/materialize.
 """
